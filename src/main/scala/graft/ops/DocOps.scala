@@ -589,7 +589,12 @@ object DocOps {
     * window — a full exchange of the inflated rows that this removes
     * (guide §2.4); at 10^12 vectors that exchange carried 16 rows per
     * vector. Cosines are the same native codegen'd expression either
-    * way, so assignments are bit-identical. */
+    * way, so assignments are bit-identical.
+    *
+    * The centroid collect runs EAGERLY, when this DataFrame is built, not
+    * when it is executed: building it (even only to explain its plan)
+    * launches one Spark job, and the centroids are the embeddings as they
+    * were at construction. */
   def annIvfCells(spark: SparkSession, dir: String, nCells: Int = 16): DataFrame = {
     import spark.implicits._
     withCosine(spark)
@@ -608,6 +613,10 @@ object DocOps {
     }
     val best =
       if (candidates.size == 1) candidates.head else greatest(candidates: _*)
+    // one output row per INPUT row: this equals the oracle's row_number()
+    // PARTITION BY vec_id (one row per distinct vec_id) only because vec_id
+    // is a unique key of the embeddings table (IvfAssignSpec guards it on
+    // the fixture); duplicate vec_ids would each be emitted
     emb.select(col("vec_id"), (-best.getField("negcell")).as("cell"))
       .orderBy("vec_id")
   }

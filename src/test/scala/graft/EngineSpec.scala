@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
 import graft.corpus.{CorpusGen, PageRow}
 import graft.index.IndexBuild
-import graft.queryengine.{SearchEngine, Statistics}
+import graft.queryengine.{MissingDocsException, SearchEngine, Statistics}
 
 /** End-to-end engine vs reference-oracle rank-identity on the fixture
   * corpus + query set (SURVEY.md §5; FIXTURES.md §4), plus the per-row
@@ -77,6 +77,51 @@ class EngineSpec extends AnyFunSuite {
     (s"ёж $midLemma", None), // ё-word destroyed (F4) ⇒ single-term query
     ("есть", None) // stop lemma alone ⇒ ALL query terms prune (F5)
   )
+
+  /** A physical copy of the built index (a fresh path: the session's
+    * CacheManager matches cached plans by path). */
+  def copyIndex(prefix: String): String = {
+    built
+    val copy = Files.createTempDirectory(prefix).toString + "/idx"
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(indexDir), new java.io.File(copy))
+    copy
+  }
+
+  /** Runs `body` and counts the Spark jobs it launched, attributed by
+    * job-group id: the submitting thread's locals are captured across
+    * Spark's async AQE/broadcast submission
+    * (SQLExecution.withThreadLocalCaptured), so any job the body launches
+    * — directly or via AQE — carries the group. */
+  def jobsIn[T](body: => T): (T, Int) = {
+    val bodyJobs = new java.util.concurrent.atomic.AtomicInteger
+    val markerJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        js.properties.getProperty("spark.jobGroup.id") match {
+          case "jobs-under-test" => bodyJobs.incrementAndGet(); ()
+          case "jobs-marker" => markerJobs.incrementAndGet(); ()
+          case _ => ()
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup("jobs-under-test", "body under test")
+      val out = body
+      spark.sparkContext.setJobGroup("jobs-marker", "bus drain")
+      // the listener bus is async but FIFO: once the marker's JobStart is
+      // delivered, any earlier job of the body is already counted
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 10000000000L
+      while (markerJobs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerJobs.get() > 0, "marker job not observed — listener broken")
+      (out, bodyJobs.get())
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 
   test("per-row invariant: html_to_text(html) == text, byte-identical per url (input_hint)") {
     built
@@ -270,16 +315,7 @@ class EngineSpec extends AnyFunSuite {
     // distinct physical copy of the index: the shared-session CacheManager
     // matches by plan, so an engine over the ORIGINAL path could silently
     // serve another engine's cached data even with the gate on
-    val copyRoot = Files.createTempDirectory("graft-nocache").toString
-    val copy = s"$copyRoot/idx"
-    import java.nio.file.{Path => JPath, Paths, StandardCopyOption}
-    val src = Paths.get(indexDir)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(src).iterator().asScala.foreach { p: JPath =>
-      val dst = Paths.get(copy).resolve(src.relativize(p))
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
-      else java.nio.file.Files.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
-    }
+    val copy = copyIndex("graft-nocache")
     spark.conf.set("spark.graft.noIndexCache", "true")
     try {
       val uncached = new SearchEngine(spark, copy, pagesPath, Bm25())
@@ -312,40 +348,44 @@ class EngineSpec extends AnyFunSuite {
     assert(usable.length == 2, "fixture must salt >=2 unpruned head terms")
     // constructing the engine runs the prefetch jobs; count jobs only after
     val engine = new SearchEngine(spark, indexDir, pagesPath, Bm25())
-    // count jobs attributed to the query region via the job-group id: the
-    // submitting thread's locals are captured across Spark's async
-    // AQE/broadcast submission (SQLExecution.withThreadLocalCaptured), so
-    // any job the query launches — directly or via AQE — carries the group
-    val queryJobs = new java.util.concurrent.atomic.AtomicInteger
-    val markerJobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        js.properties.getProperty("spark.jobGroup.id") match {
-          case "prefetch-test-query" => queryJobs.incrementAndGet(); ()
-          case "prefetch-test-marker" => markerJobs.incrementAndGet(); ()
-          case _ => ()
-        }
-      }
+    val (hits, jobs) = jobsIn(engine.topK(usable.mkString(" "), 10))
+    assert(hits.nonEmpty)
+    assert(jobs == 0,
+      s"head-term query must be fully served by the prefetched caches (saw $jobs jobs)")
+  }
+
+  test("job budget: a warm search runs ONE Spark job (the slice's html fetch), scoped or not; a page-2 replay at most one") {
+    built
+    val engine = new SearchEngine(spark, indexDir, pagesPath, ReferenceTfSum)
+    val q = s"$commonForm $midLemma"
+    // scoped first: the unscoped search leaves its ranked list in the
+    // pagination cache for the page-2 replay below
+    for (site <- Seq(Some("https://site1.test"), None)) {
+      engine.search(q, 0, 10, site) // fills every cache the query reads
+      val (r, jobs) = jobsIn(engine.search(q, 0, 10, site))
+      assert(r.data.nonEmpty, s"fixture query must match (site=$site)")
+      assert(jobs == 1, s"warm search (site=$site) ran $jobs Spark jobs, want 1")
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup("prefetch-test-query", "query under test")
-      val hits = engine.topK(usable.mkString(" "), 10)
-      assert(hits.nonEmpty)
-      spark.sparkContext.setJobGroup("prefetch-test-marker", "bus drain")
-      // the listener bus is async but FIFO: once the marker's JobStart is
-      // delivered, any earlier query job would already be counted
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 10000000000L
-      while (markerJobs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(20)
-      assert(markerJobs.get() > 0, "marker job not observed — listener broken")
-      assert(queryJobs.get() == 0,
-        s"head-term query must be fully served by the prefetched caches (saw ${queryJobs.get()} jobs)")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-      ()
+    val (page2, replayJobs) = jobsIn(engine.search(q, 10, 10, None))
+    assert(page2.data.nonEmpty, "fixture query must have a second page")
+    assert(replayJobs <= 1, s"page-2 replay ran $replayJobs Spark jobs, want at most 1")
+  }
+
+  test("a doc_id missing from docs fails with MissingDocsException naming it, scoped or not") {
+    built
+    val copy = copyIndex("graft-lostdocs")
+    val exp = RefOracle.search(oracle, rareForm, None, ReferenceTfSum)
+    assert(exp.results.nonEmpty, "fixture query must match")
+    val victimUrl = exp.results.head.url
+    val victim = IndexBuild.stableDocId(victimUrl)
+    val part = new java.io.File(s"$copy/docs/db=${IndexBuild.docBucketOf(victim, idxCfg.buckets)}")
+    assert(part.isDirectory, s"docs must be partitioned by db: $part")
+    org.apache.commons.io.FileUtils.deleteDirectory(part)
+    val engine = new SearchEngine(spark, copy, pagesPath, ReferenceTfSum)
+    for (site <- Seq(None, Some("https://" + IndexBuild.siteOf(victimUrl)))) {
+      val err = intercept[MissingDocsException](engine.search(rareForm, 0, 10, site))
+      assert(err.missing.contains(victim), s"error must name doc $victim (site=$site)")
+      assert(err.getMessage.contains(victim.toString))
     }
   }
 

@@ -135,6 +135,59 @@ class RefreshSpec extends AnyFunSuite {
     assert(!paged.data.exists(i => i.site + i.uri == victimUrl))
   }
 
+  test("after refreshPages a live engine's scoped search takes the new scoped dfs and 80% prune") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-refresh-scoped").toString
+    val pages = CorpusGen.generate(spark, CorpusGen.Config(2, 20)).collect().toSeq
+    spark.createDataset(pages).write.mode("overwrite").parquet(s"$work/pages")
+    IndexBuild.run(spark, spark.read.parquet(s"$work/pages")
+      .as[PageRow](org.apache.spark.sql.Encoders.product[PageRow]), s"$work/idx", idxCfg)
+    IndexBuild.mergeSegments(spark, s"$work/idx")
+    def oracleOf(ps: Seq[PageRow]) = new RefOracle.Corpus(ps.map { r =>
+      RefOracle.Doc(r.url, IndexBuild.siteOf(r.url), new String(r.html, StandardCharsets.UTF_8))
+    })
+
+    val l = RuDict.contentLemmas
+    val (marker, rare) = (l(198), l(196))
+    val site0 = "https://site0.test"
+    val q = s"$marker $rare"
+    val engine = new SearchEngine(spark, s"$work/idx", s"$work/pages", ReferenceTfSum)
+    def check(oracle: RefOracle.Corpus, when: String) =
+      for (site <- Seq(Some(site0), None)) yield {
+        val exp = RefOracle.search(oracle, q, site.map(IndexBuild.siteOf), ReferenceTfSum)
+        val got = engine.search(q, 0, 30, site)
+        val urls = got.data.map(i => i.site + i.uri)
+        assert(got.count == exp.count.toLong, s"count mismatch $when (site=$site)")
+        assert(urls == exp.results.take(30).map(_.url), s"ranking mismatch $when (site=$site)")
+        (got.count, urls)
+      }
+    // warms the scoped df, site count and doc-ref caches
+    val before = check(oracleOf(pages), "before the refresh")
+
+    // 17 of site0's 20 pages now carry the marker: its scoped df is 85%,
+    // so a site0-scoped query prunes it, while its global df stays under
+    // 80% and the unscoped query keeps it; 5 of them also carry `rare`
+    val site0Urls = pages.map(_.url).filter(_.startsWith(site0)).sorted.take(17)
+    val refreshed = site0Urls.zipWithIndex.map { case (u, i) =>
+      page(u, html(s"обновлено $i",
+        s"$marker ${RuDict.formsOf(marker)(1)} ${l(2)}" + (if (i < 5) s" $rare" else "")))
+    }
+    Refresh.refreshPages(spark, s"$work/idx", spark.createDataset(refreshed), idxCfg)
+    val byUrl = refreshed.map(p => p.url -> p).toMap
+    val modified = pages.map(p => byUrl.getOrElse(p.url, p))
+    spark.createDataset(modified).write.mode("overwrite").parquet(s"$work/pages")
+
+    val after = check(oracleOf(modified), "after the refresh")
+    assert(after.head != before.head,
+      "fixture: the scoped answer must change, or stale caches would go unseen")
+    // page 0 carries `rare`, so the scoped answer holds it
+    assert(after.head._2.contains(site0Urls.head))
+    assert(engine.search(q, 0, 30, Some(site0)).data
+      .find(i => i.site + i.uri == site0Urls.head).map(_.title).contains("обновлено 0"),
+      "the refreshed page must present its new title")
+  }
+
   test("one-page refresh rewrites ONLY touched bucket partitions; untouched files stay byte-identical") {
     spark.sparkContext.setLogLevel("WARN")
     val work = Files.createTempDirectory("graft-refresh-pruned").toString

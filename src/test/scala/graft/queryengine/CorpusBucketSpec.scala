@@ -87,6 +87,43 @@ class CorpusBucketSpec extends AnyFunSuite {
     assert(resp.data.forall(_.title != null))
   }
 
+  test("corpus rewritten under a live engine: the next search presents the new title and snippet") {
+    val work = Files.createTempDirectory("graft-corpusrewrite").toString
+    val pages = CorpusGen.generate(spark, CorpusGen.Config(nSites = 2, pagesPerSite = 100))
+      .collect().toSeq
+    val store = TableStore.open(spark, s"$work/pages")
+    import spark.implicits._
+    CorpusGen.writeBucketed(store, spark.createDataset(pages).toDF, buckets = 8)
+    IndexBuild.run(spark,
+      store.read("").as[graft.corpus.PageRow](
+        org.apache.spark.sql.Encoders.product[graft.corpus.PageRow]),
+      s"$work/idx", IndexBuild.Config(nBatches = 1))
+    IndexBuild.mergeSegments(spark, s"$work/idx")
+    val engine = new SearchEngine(spark, s"$work/idx", s"$work/pages")
+    val q = "бома бава"
+    val before = engine.search(q, 0, 5)
+    assert(before.data.nonEmpty)
+
+    // same urls, new html, and a different bucket count: the held corpus
+    // relation and its page-bucket count are both stale now
+    def newHtml(url: String): String =
+      s"<html><head><title>обновлено $url</title></head>" +
+        "<body><p>новое бома бава тело страницы</p></body></html>"
+    CorpusGen.writeBucketed(store, spark.createDataset(pages.map(p =>
+      p.copy(html = newHtml(p.url).getBytes(java.nio.charset.StandardCharsets.UTF_8)))).toDF,
+      buckets = 4)
+
+    val after = engine.search(q, 0, 5)
+    assert(after.count == before.count && after.data.map(_.uri) == before.data.map(_.uri),
+      "the index did not change, so neither may the ranking")
+    after.data.foreach { i =>
+      assert(i.title == graft.core.HtmlText.title(newHtml(i.site + i.uri)),
+        s"stale title for ${i.uri}: ${i.title}")
+      assert(i.snippet.contains("новое") && i.snippet.contains("<b>"),
+        s"stale snippet for ${i.uri}: ${i.snippet}")
+    }
+  }
+
   test("unbucketed corpus: fetch falls back to the full scan and still works") {
     val work = Files.createTempDirectory("graft-corpusflat").toString
     val cfg = CorpusGen.Config(nSites = 1, pagesPerSite = 60)
@@ -104,5 +141,50 @@ class CorpusBucketSpec extends AnyFunSuite {
     val urls = store.read("").select("url").limit(2)
       .collect().map(_.getString(0)).toSeq
     assert(engine.presentFetch(urls).collect().length == 2)
+  }
+
+  test("unbucketed corpus: a file the held listing missed is found after a short fetch") {
+    val work = Files.createTempDirectory("graft-corpusstale").toString
+    val pages = CorpusGen.generate(spark, CorpusGen.Config(nSites = 1, pagesPerSite = 80))
+      .collect().toSeq
+    import spark.implicits._
+    IndexBuild.run(spark, spark.createDataset(pages), s"$work/idx", IndexBuild.Config(nBatches = 1))
+    IndexBuild.mergeSegments(spark, s"$work/idx")
+    val q = "бома бава"
+
+    // the first result's page, learned on a complete copy of the corpus
+    TableStore.open(spark, s"$work/full").replace(spark.createDataset(pages).toDF, "")
+    val top = new SearchEngine(spark, s"$work/idx", s"$work/full").search(q, 0, 5).data.head
+    val held = pages.filter(_.url == top.site + top.uri)
+    assert(held.size == 1)
+    val heldTitle = graft.core.HtmlText.title(
+      new String(held.head.html, java.nio.charset.StandardCharsets.UTF_8))
+
+    // the served corpus lacks that page; its file waits under a hidden
+    // name (`_`-prefixed files are not listed) in the same directory
+    val store = TableStore.open(spark, s"$work/pages")
+    store.replace(spark.createDataset(pages.filterNot(_.url == top.site + top.uri)).toDF, "")
+    spark.createDataset(held).toDF.coalesce(1).write.parquet(s"$work/held")
+    val dir = java.nio.file.Paths.get(s"$work/pages")
+    val part = new java.io.File(s"$work/held").listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, dir.resolve("_held.parquet"))
+
+    val engine = new SearchEngine(spark, s"$work/idx", s"$work/pages")
+    val before = engine.search(q, 0, 5)
+    assert(before.data.head.uri == top.uri && before.data.head.title != heldTitle)
+
+    // publish the file without moving the corpus stamp (same entry count,
+    // directory mtime restored): the held listing is now stale
+    val stamp = store.fingerprint(Seq(""))
+    val mtime = Files.getLastModifiedTime(dir)
+    Files.move(dir.resolve("_held.parquet"), dir.resolve("part-held.parquet"))
+    Files.setLastModifiedTime(dir, mtime)
+    assert(store.fingerprint(Seq("")) == stamp, "the stamp must miss this change")
+
+    val after = engine.search(q, 0, 5)
+    assert(after.data.map(_.uri) == before.data.map(_.uri))
+    assert(after.data.head.title == heldTitle,
+      s"stale listing: ${after.data.head.uri} presented with title '${after.data.head.title}'")
   }
 }
